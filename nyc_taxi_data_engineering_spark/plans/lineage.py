@@ -10,9 +10,12 @@ channel.
 
 from __future__ import annotations
 
+import datetime as _dt
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from nyc_taxi_data_engineering_spark.schemas import LINEAGE_SCHEMA
 
@@ -33,28 +36,21 @@ class LineageHop:
     lineage_version: int = 1
 
 
-def lineage_row(spark: SparkSession, hop: LineageHop) -> DataFrame:
-    import datetime as _dt
-
-    values = [
-        hop.pipeline_name, hop.pipeline_stage, hop.source_layer, hop.source_dataset,
-        hop.dataset_layer, hop.dataset_name, hop.transformation_name,
-        hop.transformation_type, hop.created_by,
-        _dt.datetime.fromisoformat(hop.created_at), hop.is_active, hop.lineage_version,
-    ]
-    return spark.createDataFrame([values], LINEAGE_SCHEMA)
-
-
 def lineage_table(spark: SparkSession, hops: list[LineageHop]) -> DataFrame:
-    import datetime as _dt
-
+    """One ``LINEAGE_SCHEMA`` row per hop, as a one-partition frame built
+    in the JVM: the rows are literal structs exploded (``inline``) over a
+    one-row range. ``createDataFrame`` over Python rows would build a
+    Python-worker RDD of ``defaultParallelism`` partitions instead, so a
+    3-row ledger cost 4 tasks and 4 output files."""
     rows = [
-        [
-            h.pipeline_name, h.pipeline_stage, h.source_layer, h.source_dataset,
-            h.dataset_layer, h.dataset_name, h.transformation_name,
-            h.transformation_type, h.created_by,
-            _dt.datetime.fromisoformat(h.created_at), h.is_active, h.lineage_version,
-        ]
+        F.struct(
+            F.lit(h.pipeline_name), F.lit(h.pipeline_stage), F.lit(h.source_layer),
+            F.lit(h.source_dataset), F.lit(h.dataset_layer), F.lit(h.dataset_name),
+            F.lit(h.transformation_name), F.lit(h.transformation_type),
+            F.lit(h.created_by), F.lit(_dt.datetime.fromisoformat(h.created_at)),
+            F.lit(h.is_active), F.lit(h.lineage_version),
+        )
         for h in hops
     ]
-    return spark.createDataFrame(rows, LINEAGE_SCHEMA)
+    ledger = F.array(*rows).cast(T.ArrayType(LINEAGE_SCHEMA))
+    return spark.range(0, 1, 1, numPartitions=1).select(F.inline(ledger))

@@ -12,15 +12,36 @@ Zone layout under ``out_root``::
     curated/trips/*.parquet
     analytics/daily_revenue/*.parquet
     governance/lineage/*.parquet
+
+At small scale a run's wall time is set by how many Spark jobs run one
+after another, not by the data they move, so the pipeline avoids serial
+jobs that carry no data:
+
+- validate's three sinks (the partitioned validated write, the
+  quarantine write and the metrics JSON) depend on each other only
+  through the raw scan they each re-read, so they run at the same time
+  (``plans.concurrency.run_concurrently``) inside the stage's job group;
+  the stage raises the first failed sink in that order.
+- Reads of zones this run wrote carry the schema of the frame that
+  wrote them, and the gate reads the metrics JSON with
+  ``RUN_METRICS_SCHEMA``, so no read launches a schema-inference job.
+  A stage run without that state (e.g. restarted alone) infers.
+- ``supplier`` is scanned once per run and shared by curate and
+  analytics.
+
+The shared state is schemas and one lazy scan plan, never computed
+data: stages still couple only through data at rest.
 """
 
 from __future__ import annotations
 
+import functools
 from dataclasses import dataclass
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from nyc_taxi_data_engineering_spark.catalog import Zone, load_table, zone_path
 from nyc_taxi_data_engineering_spark.operators.enrich import DimSpec, enrich_with_dims
@@ -30,10 +51,12 @@ from nyc_taxi_data_engineering_spark.operators.validate import (
     split_metrics,
     validate_split,
 )
+from nyc_taxi_data_engineering_spark.plans.concurrency import run_concurrently
 from nyc_taxi_data_engineering_spark.plans.governance import governance_gate
 from nyc_taxi_data_engineering_spark.plans.lineage import LineageHop, lineage_table
 from nyc_taxi_data_engineering_spark.plans.orchestrator import Pipeline, PipelineHalt
 from nyc_taxi_data_engineering_spark.queries.validation import lineitem_checks
+from nyc_taxi_data_engineering_spark.schemas import RUN_METRICS_SCHEMA
 from nyc_taxi_data_engineering_spark.sources import write_json_metrics, write_parquet
 
 
@@ -60,20 +83,42 @@ def build_pipeline(spark: SparkSession, cfg: PipelineConfig) -> Pipeline:
             )
         )
 
+    # Per-run state beside ``hops``: the writer schema of each zone this
+    # run wrote (keyed by path) and the shared supplier scan.
+    zone_schemas: dict[str, T.StructType] = {}
+
+    @functools.cache
+    def _supplier() -> DataFrame:
+        return load_table(spark, cfg.sf_dir, "supplier")
+
+    def _write_zone(df: DataFrame, path: str, **kw: Any) -> None:
+        write_parquet(df, path, **kw)
+        zone_schemas[path] = df.schema
+
+    def _read_zone(path: str) -> DataFrame:
+        schema = zone_schemas.get(path)
+        return (spark.read if schema is None else spark.read.schema(schema)).parquet(path)
+
     def stage_validate(ctx: dict[str, Any]):
         raw = load_table(spark, cfg.sf_dir, "lineitem")
         split = validate_split(raw, lineitem_checks())
         valid = add_run_metadata(split.valid, cfg.run_id, cfg.run_date)
-        write_parquet(valid, zone_path(cfg.out_root, Zone.VALIDATED, "trips"),
-                      partition_by=["run_date"])
-        write_parquet(split.quarantine, zone_path(cfg.out_root, Zone.QUARANTINE, "trips"))
         metrics = split_metrics(split.flagged, cfg.run_id, "validate")
-        write_json_metrics(metrics, zone_path(cfg.out_root, Zone.AUDIT, "metrics/validate"))
+        out = zone_path(cfg.out_root, Zone.VALIDATED, "trips")
+        quarantine = zone_path(cfg.out_root, Zone.QUARANTINE, "trips")
+        metrics_out = zone_path(cfg.out_root, Zone.AUDIT, "metrics/validate")
+        run_concurrently([
+            lambda: _write_zone(valid, out, partition_by=["run_date"]),
+            lambda: write_parquet(split.quarantine, quarantine),
+            lambda: write_json_metrics(metrics, metrics_out),
+        ])
         _hop("validate", "raw", "lineitem", "validated", "trips", "validate_and_split")
-        return zone_path(cfg.out_root, Zone.VALIDATED, "trips")
+        return out
 
     def stage_gate(ctx: dict[str, Any]):
-        metrics = spark.read.json(zone_path(cfg.out_root, Zone.AUDIT, "metrics/validate"))
+        metrics = spark.read.schema(RUN_METRICS_SCHEMA).json(
+            zone_path(cfg.out_root, Zone.AUDIT, "metrics/validate")
+        )
         decision = governance_gate(metrics, cfg.quality_threshold).collect()[0]
         if decision["decision"] != "PASS":
             raise PipelineHalt(
@@ -83,8 +128,8 @@ def build_pipeline(spark: SparkSession, cfg: PipelineConfig) -> Pipeline:
         return decision["quality_pct"]
 
     def stage_curate(ctx: dict[str, Any]):
-        validated = spark.read.parquet(ctx["validate"])
-        sup = load_table(spark, cfg.sf_dir, "supplier")
+        validated = _read_zone(ctx["validate"])
+        sup = _supplier()
         nation = load_table(spark, cfg.sf_dir, "nation")
         supp_dim = sup.join(F.broadcast(nation), sup.s_nationkey == nation.n_nationkey).select(
             "s_suppkey", F.col("n_name").alias("nation_name")
@@ -97,13 +142,13 @@ def build_pipeline(spark: SparkSession, cfg: PipelineConfig) -> Pipeline:
             .withColumn("curated_ts", F.lit(f"{cfg.run_date} 00:00:00").cast("timestamp"))
         )
         out = zone_path(cfg.out_root, Zone.CURATED, "trips")
-        write_parquet(curated, out)
+        _write_zone(curated, out)
         _hop("curate", "validated", "trips", "curated", "trips", "enrich_with_dims")
         return out
 
     def stage_analytics(ctx: dict[str, Any]):
-        curated = spark.read.parquet(ctx["curate"])
-        sup = load_table(spark, cfg.sf_dir, "supplier")
+        curated = _read_zone(ctx["curate"])
+        sup = _supplier()
         agg = daily_vendor_revenue(
             fact=curated,
             vendors=sup.withColumnRenamed("s_suppkey", "l_suppkey"),

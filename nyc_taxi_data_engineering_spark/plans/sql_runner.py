@@ -10,10 +10,12 @@ Multi-statement transforms split on ';' exactly like the reference
 
 from __future__ import annotations
 
-from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
+
+from nyc_taxi_data_engineering_spark.plans.concurrency import run_concurrently
 
 
 class SqlCheckFailure(RuntimeError):
@@ -46,9 +48,10 @@ def run_sql_workflow(
     Transforms are ordered barriers (a later check may read the view a
     transform defines), but a maximal run of CONSECUTIVE check steps is
     independent read-only SELECTs — those are submitted concurrently
-    (Spark's scheduler runs jobs from separate threads side by side, so
-    on a cluster the small check jobs fill the executors instead of
-    draining them one at a time). Error identity keeps workflow order:
+    through ``run_concurrently``, so their jobs keep the caller's job
+    group and local properties (Spark's scheduler runs jobs from
+    separate threads side by side, so on a cluster the small check jobs
+    fill the executors instead of draining them one at a time). Error identity keeps workflow order:
     each check captures its own outcome (result OR exception), and the
     batch is then examined in step order, raising the FIRST failure —
     so the surfaced error is the same one serial execution would
@@ -71,9 +74,7 @@ def run_sql_workflow(
     def _flush(batch: list[SqlStep]) -> None:
         if not batch:
             return
-        with ThreadPoolExecutor(max_workers=min(8, len(batch))) as pool:
-            batch_results = list(pool.map(_check, batch))
-        for r, exc in batch_results:
+        for r, exc in run_concurrently([partial(_check, s) for s in batch]):
             if exc is not None:
                 raise exc
             results.append(r)

@@ -1,9 +1,16 @@
 from __future__ import annotations
 
+import os
+
 import pytest
 
+from nyc_taxi_data_engineering_spark.plans.concurrency import run_concurrently
 from nyc_taxi_data_engineering_spark.plans.orchestrator import Pipeline, PipelineHalt
-from nyc_taxi_data_engineering_spark.plans.pipeline import PipelineConfig, run_pipeline
+from nyc_taxi_data_engineering_spark.plans.pipeline import (
+    PipelineConfig,
+    build_pipeline,
+    run_pipeline,
+)
 from nyc_taxi_data_engineering_spark.plans.sql_runner import (
     SqlCheckFailure,
     SqlStep,
@@ -43,6 +50,138 @@ def test_pipeline_gate_halts(spark, tmp_path):
     assert status["validate"] == "SUCCEEDED"
     assert status["gate"] == "HALTED"
     assert status["curate"] == status["analytics"] == status["lineage"] == "SKIPPED"
+
+
+def _part_files(path, suffix):
+    return sorted(p for p in os.listdir(path) if p.startswith("part-") and p.endswith(suffix))
+
+
+def test_pipeline_metrics_json_matches_serial_write(spark, tmp_path):
+    """validate's concurrent metrics sink writes the same bytes as
+    ``split_metrics`` written on its own."""
+    from nyc_taxi_data_engineering_spark.catalog import load_table
+    from nyc_taxi_data_engineering_spark.operators.validate import split_metrics, validate_split
+    from nyc_taxi_data_engineering_spark.queries.validation import lineitem_checks
+
+    cfg = PipelineConfig(sf_dir=TEST_SF_DIR, out_root=str(tmp_path / "run"))
+    _, runs = run_pipeline(spark, cfg)
+    assert runs[0].status == "SUCCEEDED"
+    flagged = validate_split(load_table(spark, TEST_SF_DIR, "lineitem"), lineitem_checks()).flagged
+    write_json_metrics(split_metrics(flagged, cfg.run_id, "validate"), str(tmp_path / "serial"))
+
+    got_dir, want_dir = tmp_path / "run/audit/metrics/validate", tmp_path / "serial"
+    got, want = _part_files(got_dir, ".json"), _part_files(want_dir, ".json")
+    assert len(got) == len(want) == 1
+    assert (got_dir / got[0]).read_bytes() == (want_dir / want[0]).read_bytes()
+
+
+def test_pipeline_zone_reads_carry_the_writer_schema(spark, tmp_path, monkeypatch):
+    """curate and analytics read the zones this run wrote with a given
+    schema (no inference job), and that schema is the one inference
+    would find."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    reads = {}
+    orig_schema, orig_parquet = DataFrameReader.schema, DataFrameReader.parquet
+
+    def schema(self, given):
+        self._test_given_schema = given
+        return orig_schema(self, given)
+
+    def parquet(self, *paths, **kw):
+        df = orig_parquet(self, *paths, **kw)
+        reads[paths[0]] = (getattr(self, "_test_given_schema", None), df.schema)
+        return df
+
+    monkeypatch.setattr(DataFrameReader, "schema", schema)
+    monkeypatch.setattr(DataFrameReader, "parquet", parquet)
+    ctx, runs = run_pipeline(spark, PipelineConfig(sf_dir=TEST_SF_DIR, out_root=str(tmp_path)))
+    monkeypatch.undo()
+    assert [r.status for r in runs] == ["SUCCEEDED"] * 5
+    for zone in ("validate", "curate"):
+        given, got = reads[ctx[zone]]
+        assert given is not None, zone
+        assert got == spark.read.parquet(ctx[zone]).schema, zone
+
+
+def test_pipeline_lineage_zone_is_one_file(spark, tmp_path):
+    import datetime
+
+    from nyc_taxi_data_engineering_spark.schemas import LINEAGE_SCHEMA
+
+    ctx, _ = run_pipeline(spark, PipelineConfig(sf_dir=TEST_SF_DIR, out_root=str(tmp_path)))
+    assert len(_part_files(ctx["lineage"], ".parquet")) == 1
+    lineage = spark.read.parquet(ctx["lineage"])
+    assert lineage.schema == LINEAGE_SCHEMA
+    created = datetime.datetime(2024, 1, 1)
+    assert sorted(tuple(r) for r in lineage.collect()) == sorted([
+        ("medallion_demo", "validate", "raw", "lineitem", "validated", "trips",
+         "validate_and_split", "batch_etl", "engine", created, True, 1),
+        ("medallion_demo", "curate", "validated", "trips", "curated", "trips",
+         "enrich_with_dims", "batch_etl", "engine", created, True, 1),
+        ("medallion_demo", "aggregate", "curated", "trips", "analytics", "daily_revenue",
+         "daily_vendor_revenue", "batch_etl", "engine", created, True, 1),
+    ])
+
+
+def test_pipeline_concurrent_sink_failure_surfaces(spark, tmp_path):
+    """A plain file where the quarantine zone's parent directory goes
+    fails only that sink; validate still ends FAILED with its error
+    after every retry, and the later stages are skipped."""
+    (tmp_path / "quarantine").write_text("not a directory")
+    pipeline = build_pipeline(spark, PipelineConfig(sf_dir=TEST_SF_DIR, out_root=str(tmp_path)))
+    validate, errors = pipeline.stages[0], []
+
+    def recording(ctx, fn=validate.fn):
+        try:
+            return fn(ctx)
+        except Exception as e:
+            errors.append(e)
+            raise
+
+    validate.fn = recording
+    _, runs = pipeline.run({})
+    assert [r.status for r in runs] == ["FAILED"] + ["SKIPPED"] * 4
+    assert runs[0].attempts == len(errors) == 3
+    assert all(f"Parent path is not a directory: file:{tmp_path}/quarantine" in str(e)
+               for e in errors)
+    assert runs[0].error == repr(errors[-1])
+
+
+def test_pipeline_validate_jobs_keep_the_callers_job_group(spark, tmp_path):
+    sc = spark.sparkContext
+
+    def drained_ids(group):
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return set(sc.statusTracker().getJobIdsForGroup(group))
+
+    ungrouped_before = drained_ids(None)
+    pipeline = build_pipeline(spark, PipelineConfig(sf_dir=TEST_SF_DIR, out_root=str(tmp_path)))
+    validate = next(s for s in pipeline.stages if s.name == "validate")
+    sc.setJobGroup("test-validate-group", "validate")
+    try:
+        validate.fn({})
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    # the three sinks at least, and nothing outside the group
+    assert len(drained_ids("test-validate-group")) >= 3
+    assert drained_ids(None) - ungrouped_before == set()
+
+
+def test_run_concurrently_raises_first_failure_in_submission_order():
+    import time
+
+    def fails(msg, delay):
+        def task():
+            time.sleep(delay)
+            raise ValueError(msg)
+        return task
+
+    assert run_concurrently([lambda: 1, lambda: 2]) == [1, 2]
+    # the second task fails first in time; the first one's error wins
+    with pytest.raises(ValueError, match="first"):
+        run_concurrently([fails("first", 0.2), fails("second", 0.0), lambda: 3])
 
 
 def test_orchestrator_retry_and_failure():

@@ -9,6 +9,7 @@ Usage: python tools/bench_compare.py BASE.json NEW.json
 from __future__ import annotations
 
 import json
+import math
 import os
 import re
 import sys
@@ -81,13 +82,33 @@ def _regime(doc: dict, path: str) -> str:
     return "unknown"
 
 
+def _canaries(base_doc: dict, new_doc: dict, key: str) -> tuple[float, float] | tuple[None, None]:
+    """Both records' ``key`` canary when both are usable timings. A
+    canary that is recorded but zero, negative or not a number cannot
+    say whether the two records saw the same host speed, so that is
+    reported instead of skipping the window check silently; records
+    from before the canary existed carry none and stay quiet."""
+    vals = {"base": base_doc.get(key), "new": new_doc.get(key)}
+    if all(v is None for v in vals.values()):
+        return None, None
+    bad = {
+        side: v for side, v in vals.items()
+        if isinstance(v, bool) or not isinstance(v, (int, float)) or not math.isfinite(v) or v <= 0
+    }
+    if bad:
+        print(
+            f"WARNING: unusable {key} canary ({', '.join(f'{s}={v!r}' for s, v in bad.items())}); "
+            "cannot tell whether the two records ran in the same host-speed window."
+        )
+        return None, None
+    return float(vals["base"]), float(vals["new"])
+
+
 def main() -> int:
     base_doc, new_doc = _load(sys.argv[1]), _load(sys.argv[2])
     base, new = base_doc["queries"], new_doc["queries"]
-    cb, cn = base_doc.get("host_canary_s"), new_doc.get("host_canary_s")
-    # `is not None` (ADVICE r12): a recorded-but-zero canary must not
-    # silently skip the window warning.
-    if cb is not None and cn is not None and min(cb, cn) > 0 and max(cb, cn) / min(cb, cn) > 1.3:
+    cb, cn = _canaries(base_doc, new_doc, "host_canary_s")
+    if cb is not None and max(cb, cn) / min(cb, cn) > 1.3:
         print(
             f"WARNING: host-speed canaries differ {max(cb, cn) / min(cb, cn):.2f}x "
             f"(base {cb:.3f}s vs new {cn:.3f}s per 10M-iter loop) — the records "
@@ -97,8 +118,8 @@ def main() -> int:
             f"base={sum(base.values()):.2f}s new={sum(new.values()) * cb / cn:.2f}s "
             "(new scaled by canary ratio)."
         )
-    mb, mn = base_doc.get("host_canary_mc_s"), new_doc.get("host_canary_mc_s")
-    if mb is not None and mn is not None and min(mb, mn) > 0 and max(mb, mn) / min(mb, mn) > 1.3:
+    mb, mn = _canaries(base_doc, new_doc, "host_canary_mc_s")
+    if mb is not None and max(mb, mn) / min(mb, mn) > 1.3:
         print(
             f"WARNING: MULTI-core canaries differ {max(mb, mn) / min(mb, mn):.2f}x "
             f"(base {mb:.3f}s vs new {mn:.3f}s for 8 concurrent 10M-iter loops) — "
